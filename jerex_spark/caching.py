@@ -1,11 +1,15 @@
 """Session-scoped cache registry.
 
 Operators that persist intermediate DataFrames (dedup signatures,
-canonicalization vocabularies) register them here so long-lived driver
-sessions (notebooks, services, the bench loop) can release the cached
-blocks once a query's final action has run, instead of leaking them
-until session shutdown.  bench.py and the test session fixture call
-``release_persisted()`` between queries.
+embedding tables) register them here so long-lived driver sessions
+(notebooks, services, the bench loop) can release the cached blocks
+once a query's final action has run, instead of leaking them until
+session shutdown.  ``canonicalize.canonicalize_entities`` returns its
+output as such a tracked persisted frame, so every graph build that
+reads it scans the cache; callers release it with
+``release_persisted()`` like any other.  bench.py, the test session
+fixture and scripts/run_pipeline.py call ``release_persisted()`` after
+their last action.
 """
 
 from __future__ import annotations

@@ -9,10 +9,11 @@ per-document entity clusters into corpus-level canonical ids:
 2. exact-match against the alias dictionary — a *broadcast* hash join
    (the dict is small by construction: ~10^6 rows max at web scale);
 3. for misses, MinHash-LSH blocking over character 3-gram shingles of
-   the surface (md5-based minhash signatures — same portable scheme as
-   operators/dedup.py) joins candidates to aliases sharing a band, and
-   the within-block verify keeps the best alias by edit-distance ratio
-   <= ``max_ed_ratio`` (built-in ``levenshtein`` — JVM-side);
+   the surface (md5-based minhash signatures from ``minhash_sigs``,
+   which operators/dedup.py shares) joins candidates to aliases
+   sharing a band, and the within-block verify keeps the best alias by
+   edit-distance ratio <= ``max_ed_ratio`` (built-in ``levenshtein`` —
+   JVM-side);
 4. anything still unmatched becomes self-canonical:
    ``canonical_id = 'self:' || md5(norm_phrase)``.
 
@@ -25,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .caching import persist_tracked
 
 N_HASHES = 6
 SHINGLE_C = 3          # character shingles
@@ -42,33 +45,42 @@ def _char_shingles(col_name: str, k: int = SHINGLE_C):
     slice of canon_gazetteer's driver-side construction time — the
     parsed expression tree is identical."""
     return F.expr(
-        f"transform(sequence(1, greatest(length({col_name}) - {k - 1}, "
-        f"1)), i -> substring({col_name}, i, {k}))")
+        f"transform(sequence(1, greatest(length(`{col_name}`) - {k - 1}, "
+        f"1)), i -> substring(`{col_name}`, i, {k}))")
 
 
-def _minhash_sigs(df: DataFrame, text_col: str, id_cols: list[str]):
-    """(id_cols..., hash_id, sig) minhash signatures over char
-    shingles, MAP-ONLY: each per-row minimum is ``array_min`` over the
-    md5-transformed distinct-shingle array, unpivoted with ``stack``.
-    Value-identical to the oracle's explode + GROUP BY MIN (min over
-    the multiset == min over the set; rows here are unique per id by
-    construction), with no exchange and none of the Sort+SortAggregate
-    pairs a var-length string min used to force — same move as
-    operators/dedup._sig_table."""
+def minhash_sigs(df: DataFrame, sharr_col: str, id_cols: list[str],
+                 n_hashes: int) -> DataFrame:
+    """(id_cols..., hash_id, sig) MinHash signatures of the shingle
+    array column ``sharr_col``, MAP-ONLY: hash ``i``'s minimum is
+    ``array_min`` over the array with the seeded md5
+    ``md5(i || '|' || shingle)`` applied per element, and the
+    ``n_hashes`` columns unpivot with ``stack``.  min over a multiset
+    == min over its distinct set, so this is value-identical to the
+    oracles' explode + GROUP BY MIN — with no exchange and none of the
+    Sort+SortAggregate pairs a var-length string min plans as.  Shared
+    by entity canonicalization (char shingles) and the dedup operators
+    (word shingles); each caller keeps its own shingling and hash
+    count."""
     def one_min(i: int):
-        # one F.expr per hash id (construction cost; identical tree)
+        # one F.expr per hash id (vs ~8 py4j calls each composed):
+        # construction cost, not plan shape — the tree is identical
         return F.expr(
-            f"array_min(transform(sharr, "
+            f"array_min(transform(`{sharr_col}`, "
             f"s -> md5(concat_ws('|', '{i}', s))))").alias(f"s{i}")
 
-    mins = (df.select(*id_cols,
-                      F.array_distinct(_char_shingles(text_col))
-                      .alias("sharr"))
-            .select(*id_cols, *[one_min(i) for i in range(N_HASHES)]))
-    stacked = ", ".join(f"{i}, s{i}" for i in range(N_HASHES))
+    mins = df.select(*id_cols, *[one_min(i) for i in range(n_hashes)])
+    stacked = ", ".join(f"{i}, s{i}" for i in range(n_hashes))
     return mins.select(
         *id_cols,
-        F.expr(f"stack({N_HASHES}, {stacked}) AS (hash_id, sig)"))
+        F.expr(f"stack({n_hashes}, {stacked}) AS (hash_id, sig)"))
+
+
+def _char_sigs(df: DataFrame, text_col: str, id_cols: list[str]):
+    """Signatures over the distinct char shingles of ``text_col``."""
+    sharr = df.select(*id_cols, F.array_distinct(_char_shingles(text_col))
+                      .alias("sharr"))
+    return minhash_sigs(sharr, "sharr", id_cols, N_HASHES)
 
 
 def canonicalize_form_verdicts(forms: DataFrame,
@@ -101,9 +113,9 @@ def canonicalize_form_verdicts(forms: DataFrame,
     miss_forms = exact.filter(F.col("canonical_id").isNull()).select("norm")
 
     # 2) LSH blocking for the miss forms
-    ent_sig = _minhash_sigs(miss_forms, "norm", ["norm"])
-    dict_sig = _minhash_sigs(dict_n.withColumnRenamed("alias_norm", "a"),
-                             "a", ["a", "canonical_id"])
+    ent_sig = _char_sigs(miss_forms, "norm", ["norm"])
+    dict_sig = _char_sigs(dict_n.withColumnRenamed("alias_norm", "a"),
+                          "a", ["a", "canonical_id"])
     cand = (ent_sig.join(dict_sig, ["hash_id", "sig"])
             .select("norm", "a", "canonical_id")
             .distinct())
@@ -141,10 +153,15 @@ def canonicalize_entities(entities: DataFrame, alias_dict: DataFrame,
     of magnitude smaller than the instance table on any Zipfian corpus.
     The verdict join carries no hint: AQE broadcasts it when the
     vocabulary is small and falls back to a shuffle join when it isn't.
+
+    The result is a tracked persisted frame (caching.persist_tracked):
+    the graph builds read it several times (canonical_triples joins it
+    for head and tail, canonical_entity_table for the rollup and
+    ``n_docs``), and the alias/LSH/verify plan behind it runs once, on
+    the first action.  Callers free it with
+    ``caching.release_persisted()`` after their last action.
     """
-    from .caching import persist_tracked
     ents = entities.withColumn("norm", normalize_phrase(F.col(phrase_col)))
-    # vocabulary feeds both the exact and miss branches: cache it
-    forms = persist_tracked(ents.select("norm").distinct())
-    verdict = canonicalize_form_verdicts(forms, alias_dict)
-    return ents.join(verdict, "norm").drop("norm")
+    verdict = canonicalize_form_verdicts(ents.select("norm").distinct(),
+                                         alias_dict)
+    return persist_tracked(ents.join(verdict, "norm").drop("norm"))

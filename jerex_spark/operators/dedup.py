@@ -41,6 +41,7 @@ MAX_ALLPAIRS_ROWS = 10_000
 # each query so repeated invocations don't accumulate cached blocks.
 from ..caching import persist_tracked as _persist
 from ..caching import release_persisted  # noqa: F401  (re-export)
+from ..canonicalize import minhash_sigs
 
 
 def _docs(spark, sf_dir):
@@ -212,31 +213,6 @@ def _rep_shingle_arrays(spark, sf_dir, groups, docs_df=None):
                            docs_df=d.join(reps, "doc_id", "left_semi"))
 
 
-def _sig_table(sharr_df):
-    """(doc_id, hash_id, sig) MinHash signatures, MAP-ONLY: each of the
-    N_HASHES minima is ``array_min`` over the doc's shingle array with
-    the seeded md5 applied per element, then the 8 columns unpivot
-    with ``stack``.  min over the per-doc multiset == min over the
-    distinct set, so this is value-identical to the oracle's
-    explode + GROUP BY MIN — but the plan has NO aggregation at all
-    (the previous groupBy minimum over var-length strings planned as
-    Sort + SortAggregate pairs around an exchange; guide §2.4: the
-    work is per-document, so no shuffle is fundamentally required)."""
-    def one_min(i: int):
-        # one F.expr per hash id (vs ~8 py4j calls each composed):
-        # construction cost, not plan shape — the tree is identical
-        return F.expr(
-            f"array_min(transform(sharr, "
-            f"s -> md5(concat_ws('|', '{i}', s))))").alias(f"s{i}")
-
-    mins = sharr_df.select("doc_id",
-                           *[one_min(i) for i in range(N_HASHES)])
-    stacked = ", ".join(f"{i}, s{i}" for i in range(N_HASHES))
-    return mins.select(
-        "doc_id",
-        F.expr(f"stack({N_HASHES}, {stacked}) AS (hash_id, sig)"))
-
-
 def _rep_lsh_pairs(sharr_df):
     """MinHash-LSH candidate pairs over the given (rep) shingle-array
     table — the same signature math as MINHASH_SQL."""
@@ -244,7 +220,8 @@ def _rep_lsh_pairs(sharr_df):
     # shingle->hash->min pipeline for each side (Spark has no
     # CSE across self-joins); signatures are tiny (n_reps x
     # N_HASHES rows), so cache them
-    sig = _persist(_sig_table(sharr_df))
+    sig = _persist(minhash_sigs(sharr_df, "sharr", ["doc_id"],
+                                N_HASHES))
     a = sig.select(F.col("doc_id").alias("doc_a"), "hash_id", "sig")
     b = sig.select(F.col("doc_id").alias("doc_b"), "hash_id", "sig")
     return (a.join(b, ["hash_id", "sig"])
@@ -472,8 +449,8 @@ def dedup_lsh_verified(spark, sf_dir, threshold: float = 0.5):
                  .unionByName(rp.select(F.col("doc_b").alias("doc_id")))
                  .distinct())
     # gate the DOCUMENTS, then re-shingle only the gated set: the
-    # signature side consumes its shingles exactly once (inside the one
-    # partial-aggregable groupBy of _sig_table), so persisting a full
+    # signature side consumes its shingles exactly once (inside the
+    # map-only minhash_sigs), so persisting a full
     # rep-shingle table bought nothing — the verify side's shingle
     # build now runs over candidate docs only, which is the same
     # physical gate as before (semi-join precedes the explode).

@@ -33,6 +33,7 @@ def main():
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
+    from jerex_spark.caching import persist_tracked, release_persisted
     from jerex_spark.canonicalize import canonicalize_entities
     from jerex_spark.extract import extract_graph
     from jerex_spark.graph import (canonical_entity_table,
@@ -68,7 +69,7 @@ def main():
         print(json.dumps(stage.throughput_summary()))
     else:
         graph = extract_graph(docs)
-    graph = graph.persist()
+    graph = persist_tracked(graph)
 
     t = kg_tables(graph)
     ents = entity_phrases(t["mentions"], t["entities"])
@@ -78,10 +79,11 @@ def main():
         alias = spark.createDataFrame([], "alias string, canonical_id string")
     canon = canonicalize_entities(ents, alias)
 
-    ct = canonical_triples(t["triples"], canon).persist()
+    ct = persist_tracked(canonical_triples(t["triples"], canon))
     write_graph(args.output, ct, canonical_entity_table(canon), edges(ct))
     n = ct.count()
     print(f"wrote {n} canonical triples to {args.output}")
+    release_persisted()
     spark.stop()
 
 

@@ -4,11 +4,14 @@ canonicalization (broadcast + LSH + verify), and multimodal plumbing.
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from jerex_spark.canonicalize import canonicalize_entities
+from jerex_spark.canonicalize import (_char_shingles, canonicalize_entities,
+                                      minhash_sigs)
 from jerex_spark.corpus import extract_text, make_page, make_pages
 
 
@@ -83,3 +86,24 @@ def test_canonicalize_deterministic_best(spark):
         [("d", 0, "abcdeh")], ["doc_key", "entity_idx", "phrase"])
     rows = canonicalize_entities(ents, alias).collect()
     assert rows[0].canonical_id == "Q1"
+
+
+def test_minhash_sigs_keyword_column_names(spark):
+    """The shared signature builder quotes the column names it puts
+    into SQL expression strings: shingle-array, id and text columns
+    named after SQL keywords still resolve, and each signature is the
+    min over the distinct shingles of md5(hash_id || '|' || shingle)."""
+    df = spark.createDataFrame([(1, "acme"), (2, "globex")],
+                               ["from", "select"])
+    sharr = df.select("from", F.array_distinct(_char_shingles("select"))
+                      .alias("order"))
+    got = {(r["from"], r.hash_id): r.sig
+           for r in minhash_sigs(sharr, "order", ["from"], 3).collect()}
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    want = {(k, i): min(md5(f"{i}|{t[j:j + 3]}")
+                        for j in range(max(len(t) - 2, 1)))
+            for k, t in [(1, "acme"), (2, "globex")] for i in range(3)}
+    assert got == want

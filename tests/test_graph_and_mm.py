@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from jerex_spark.caching import release_persisted
 from jerex_spark.canonicalize import canonicalize_entities
 from jerex_spark.corpus import make_pages
 from jerex_spark.extract import extract_graph
@@ -61,6 +62,34 @@ def test_alias_hits_collapse_across_docs(spark, pages_graph):
     hits = canon.filter(F.col("canonical_id") == "Q_ACME")
     if hits.count() >= 2:   # corpus plants acme in many docs
         assert hits.select("doc_key").distinct().count() >= 2
+
+
+def test_canonicalize_evaluates_once_for_all_consumers(spark, pages_graph):
+    """canonicalize_entities returns a tracked persisted frame: after the
+    first graph build materializes it, the next build reads the cache
+    and never re-runs the alias/LSH/verify plan behind it."""
+    t = kg_tables(pages_graph)
+    ents = entity_phrases(t["mentions"], t["entities"])
+    alias_rows = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(a):
+        alias_rows.add(1)
+        return a
+
+    alias = spark.createDataFrame(
+        [("acme corp", "Q_ACME"), ("globex", "Q_GLOBEX")],
+        ["alias", "canonical_id"]).select(counted("alias").alias("alias"),
+                                          "canonical_id")
+    canon = canonicalize_entities(ents, alias)
+    assert canonical_triples(t["triples"], canon).count() > 0
+    first = alias_rows.value
+    assert first > 0
+    assert canonical_entity_table(canon).count() > 0
+    assert alias_rows.value == first
+    assert canon.is_cached
+    release_persisted()
+    assert not canon.is_cached
 
 
 def test_media_features_plumbing(spark):
